@@ -7,18 +7,23 @@ import graft.operators.Similarity
 
 /** Measured ANN recall vs the exact baseline, per tier, at any scale —
   * the r15 verdict's task #1 evidence tool: the recall/agreement gates'
-  * floors are geometry-DERIVED, and this main records the geometry's
+  * floors are geometry-DERIVED (`min(cap, nProbe/cells)`, see
+  * [[Similarity.autoNProbe]]), and this main records the geometry's
   * MEASURED slack at each corpus size so "the N^(-1/6) probed-fraction
   * claim survives at 10×" is a number in COVERAGE.md, not an
-  * extrapolation.
+  * extrapolation. A diagnostic, not a gate — the gates themselves are
+  * `annRecallInvariants` / `pqInvariants` / `ivfLifecycleInvariants` /
+  * `bitextIvfInvariants`.
   *
   * Usage: `runMain graft.RecallProbe <sfDir> [tiers]` — prints one JSON
-  * line: per-tier recall@10 against [[Similarity.bruteForceTopK]] (the
-  * DuckDB-verified exact baseline at battery scales) over the standard
-  * every-100th query panel. The brute arm is O(Q·N); with the panel
-  * fixed by the `% 100` rule, Q = N/100 keeps the probe linear-ish up to
-  * sf1 (4M scored pairs) and `SPARK_GRAFT_PANEL_EVERY` widens the stride
-  * for larger corpora so Q stays bounded.
+  * line: the auto-sized geometry, per-tier recall@10 against
+  * [[Similarity.bruteForceTopK]] (the DuckDB-verified exact baseline at
+  * battery scales) over the standard every-100th query panel, the
+  * derived floors the battery gates use, and — for tier `bitext` — the
+  * argmax agreement of the IVF margin miner with the exact one and that
+  * gate's floor. The brute arm is O(Q·N); with the panel fixed by the
+  * `% 100` rule, Q = N/100 keeps the probe linear-ish up to sf1 (4M scored
+  * pairs).
   */
 object RecallProbe {
 
@@ -33,7 +38,8 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val wanted = if (args.length > 1) args(1).split(",").map(_.trim).toSet
-                 else Set("ivf", "pq", "pq256", "ivfpq", "lsh", "quantized")
+                 else Set("ivf", "ivf_quantized", "pq", "pq256", "ivfpq", "lsh",
+                   "quantized", "bitext")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -46,14 +52,18 @@ object RecallProbe {
     val e = Tables(spark, sfDir, "embeddings")
     val n = e.count()
     val k = 10
+    val cells = Similarity.autoCells(n)
+    val fraction = Similarity.autoNProbe(cells).toDouble / cells
     val brute = Similarity.bruteForceTopK(e, k,
       dim = Some(Tables.EmbeddingDim))
       .select(col("q_id"), col("neighbor_id")).localCheckpoint()
-    // SPARK_GRAFT_RERANK overrides the PQ tiers' rerankFactor — the knob
-    // the recall-vs-R calibration sweeps
+    // SPARK_GRAFT_RERANK overrides the quantized tiers' rerankFactor — the
+    // knob the recall-vs-R calibration sweeps
     val rr = sys.env.get("SPARK_GRAFT_RERANK").map(_.toInt)
     val tiers: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "ivf" -> (() => Similarity.ivfTopKKMeans(e, k, iters = 3)),
+      "ivf_quantized" -> (() => Similarity.ivfQuantizedTopK(e, k, iters = 3,
+        rerankFactor = rr.getOrElse(4))),
       "pq" -> (() => Similarity.pqTopK(e, k,
         rerankFactor = rr.getOrElse(8))),
       "pq256" -> (() => Similarity.pqTopK(e, k, m = 8, ks = 256,
@@ -67,7 +77,26 @@ object RecallProbe {
       name -> recallOf(brute, f())
     }
     val js = rec.map { case (nm, r) => f""""$nm":$r%.4f""" }.mkString(",")
-    println(s"""{"sf":"$sfDir","n":$n,"k":$k,"recall":{$js}}""")
+    // the caps are the battery gates' fixed-geometry floors
+    val floors = Seq("ivf" -> 0.5, "ivf_quantized" -> 0.9, "ivfpq" -> 0.7)
+      .map { case (nm, cap) => f""""$nm":${math.min(cap, fraction)}%.4f""" }
+      .mkString(",")
+    val bitext = if (!wanted("bitext")) "" else {
+      def argmax(d: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+        d.select(col("q_id"), col("tgt_id")).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val exact = argmax(Similarity.marginBitextPairs(e, k = 4,
+        Some(Tables.EmbeddingDim)))
+      val approx = argmax(Similarity.marginBitextPairsIvf(e, k = 4))
+      val agree = exact.count { case (q, t) => approx.get(q).contains(t) }
+        .toDouble / math.max(exact.size, 1)
+      val bCells = Similarity.autoCells(e.filter(col("vec_id") % 2 === 1).count())
+      val bProbe = Similarity.autoNProbe(bCells)
+      f""","bitext":{"cells":$bCells,"nProbe":$bProbe,"agreement":$agree%.4f,""" +
+        f""""floor":${math.min(0.85, bProbe.toDouble / bCells)}%.4f}"""
+    }
+    println(s"""{"sf":"$sfDir","n":$n,"k":$k,"cells":$cells,""" +
+      f""""fraction":$fraction%.4f,"recall":{$js},"floors":{$floors}$bitext}""")
     spark.stop()
   }
 }

@@ -168,17 +168,19 @@ object Tuning {
     * caller's session, so downstream plans are indistinguishable from the
     * old form's output. Storage level is still the size-adaptive
     * [[pinLevel]]. Safe from any thread, including concurrent arms and
-    * per-round loop pins.
+    * per-round loop pins. The clone receives the caller's ANALYZED plan:
+    * the pre-analysis plan would resolve its views and tables again against
+    * the clone's catalog, a snapshot from clone creation — a replaced temp
+    * view read its old rows, and a view created after the clone was not
+    * found at all.
     */
   def pinPartitioned(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.GraftInternals
-    val parent = df.sparkSession
-    val child = pinSessionFor(parent)
     val pinned = GraftInternals
-      .ofRows(child, GraftInternals.logicalPlan(df))
+      .ofRows(pinSessionFor(df.sparkSession), df.queryExecution.analyzed)
       .localCheckpoint(true, pinLevel(df))
-    GraftInternals.ofRows(parent, GraftInternals.logicalPlan(pinned))
+    GraftInternals.ofRows(df.sparkSession, pinned.queryExecution.logical)
   }
 
   /** The AQE-off clone used by [[pinPartitioned]], cached per parent
@@ -188,15 +190,16 @@ object Tuning {
     * one session are safe, so one clone serves every pin. Keyed on the
     * parent's shuffle-partition setting too: a pin's partition count must
     * track the session conf (see callers), so a conf change invalidates
-    * the cached clone. WeakHashMap so a dropped session doesn't leak its
-    * clone.
+    * the cached clone — the EFFECTIVE value, since a string read of an
+    * unset key type-checks its default and throws. WeakHashMap so a
+    * dropped session doesn't leak its clone.
     */
   private val pinSessions =
-    new java.util.WeakHashMap[SparkSession, (String, SparkSession)]()
+    new java.util.WeakHashMap[SparkSession, (Int, SparkSession)]()
   private def pinSessionFor(parent: SparkSession): SparkSession =
     pinSessions.synchronized {
       import org.apache.spark.sql.GraftInternals
-      val nowPar = parent.conf.get("spark.sql.shuffle.partitions", "")
+      val nowPar = parent.sessionState.conf.numShufflePartitions
       Option(pinSessions.get(parent)) match {
         case Some((par, child)) if par == nowPar => child
         case _ =>

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.{Column, GraftInternals}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -87,8 +87,8 @@ case class BloomFilterAgg(child: Expression,
 
 object BloomFilterAgg {
   def apply(hashed: Column, expectedItems: Long, fpp: Double): Column =
-    GraftColumnBridge.column(
-      BloomFilterAgg(GraftColumnBridge.expression(hashed), expectedItems, fpp)
+    GraftInternals.column(
+      BloomFilterAgg(GraftInternals.expression(hashed), expectedItems, fpp)
         .toAggregateExpression())
 
   /** Driver-side twin of the engine's `xxhash64(lit(v))` for probe values —
@@ -115,8 +115,8 @@ object BloomFilterAgg {
     */
   def mightContainCol(bloomBytes: Array[Byte], hashed: Column): Column = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    GraftColumnBridge.column(BloomFilterMightContain(
+    GraftInternals.column(BloomFilterMightContain(
       Literal(bloomBytes, org.apache.spark.sql.types.BinaryType),
-      GraftColumnBridge.expression(hashed)))
+      GraftInternals.expression(hashed)))
   }
 }

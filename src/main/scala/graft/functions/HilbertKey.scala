@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.{Column, GraftInternals}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -115,7 +115,7 @@ case class HilbertKey(left: Expression, right: Expression, bits: Int)
 
 object HilbertKey {
   def apply(x: Column, y: Column, bits: Int): Column =
-    GraftColumnBridge.column(
-      new HilbertKey(GraftColumnBridge.expression(x),
-        GraftColumnBridge.expression(y), bits))
+    GraftInternals.column(
+      new HilbertKey(GraftInternals.expression(x),
+        GraftInternals.expression(y), bits))
 }

@@ -63,9 +63,9 @@ object JaroWinkler {
 
   /** Column-API entry point (SQL name `jaro_winkler` via GraftFunctions). */
   def jaroWinkler(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      JaroWinkler(org.apache.spark.sql.GraftColumnBridge.expression(a),
-        org.apache.spark.sql.GraftColumnBridge.expression(b)))
+    org.apache.spark.sql.GraftInternals.column(
+      JaroWinkler(org.apache.spark.sql.GraftInternals.expression(a),
+        org.apache.spark.sql.GraftInternals.expression(b)))
 
   /** The scalar kernel. Double arithmetic ordered exactly as the standard
     * formulation `(m/|a| + m/|b| + (m-t)/m) / 3` then

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.{Column, GraftInternals}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -132,6 +132,6 @@ object LshBandBuckets {
   }
 
   def apply(v: Column, bands: Int, bitsPerBand: Int, dim: Int): Column =
-    GraftColumnBridge.column(LshBandBuckets(
-      GraftColumnBridge.expression(v), bands, bitsPerBand, dim))
+    GraftInternals.column(LshBandBuckets(
+      GraftInternals.expression(v), bands, bitsPerBand, dim))
 }

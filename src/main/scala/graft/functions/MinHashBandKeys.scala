@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.{Column, GraftInternals}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -144,6 +144,6 @@ case class MinHashBandKeys(child: Expression, numHashes: Int, bands: Int)
 
 object MinHashBandKeys {
   def apply(g: Column, numHashes: Int, bands: Int): Column =
-    GraftColumnBridge.column(MinHashBandKeys(
-      GraftColumnBridge.expression(g), numHashes, bands))
+    GraftInternals.column(MinHashBandKeys(
+      GraftInternals.expression(g), numHashes, bands))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.{Column, GraftInternals}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -143,7 +143,7 @@ object NearestCentroid {
   }
 
   def apply(v: Column, cents: Array[Array[Double]], dim: Int): Column =
-    GraftColumnBridge.column(NearestCentroid(
-      GraftColumnBridge.expression(v),
+    GraftInternals.column(NearestCentroid(
+      GraftInternals.expression(v),
       flatNormalized(cents, dim).toIndexedSeq, dim))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.{Column, GraftInternals}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -100,6 +100,6 @@ object NgramShingleHashes {
   private val Empty = new GenericArrayData(Array.emptyLongArray)
 
   def apply(c: Column, n: Int): Column =
-    GraftColumnBridge.column(NgramShingleHashes(
-      GraftColumnBridge.expression(c), n))
+    GraftInternals.column(NgramShingleHashes(
+      GraftInternals.expression(c), n))
 }

@@ -120,11 +120,11 @@ case class PqAdcTable(child: Expression, codebooks: Seq[Double], m: Int,
 }
 
 object PqAdcTable {
-  import org.apache.spark.sql.{Column, GraftColumnBridge}
+  import org.apache.spark.sql.{Column, GraftInternals}
 
   def apply(vec: Column, codebooks: Array[Double], m: Int, subDim: Int,
             ks: Int): Column =
-    GraftColumnBridge.column(
-      new PqAdcTable(GraftColumnBridge.expression(vec), codebooks.toSeq, m,
+    GraftInternals.column(
+      new PqAdcTable(GraftInternals.expression(vec), codebooks.toSeq, m,
         subDim, ks))
 }

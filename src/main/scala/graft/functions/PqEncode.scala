@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.{Column, GraftInternals}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -168,6 +168,6 @@ object PqEncode {
     */
   def apply(v: Column, codebooks: Array[Double], m: Int, subDim: Int,
             ks: Int): Column =
-    GraftColumnBridge.column(PqEncode(
-      GraftColumnBridge.expression(v), codebooks.toIndexedSeq, m, subDim, ks))
+    GraftInternals.column(PqEncode(
+      GraftInternals.expression(v), codebooks.toIndexedSeq, m, subDim, ks))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.{Column, GraftInternals}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -136,7 +136,7 @@ case class PqRecNormSq(left: Expression, right: Expression,
 object PqRecNormSq {
   def apply(codes: Column, centroid: Column, codebooks: Array[Double], m: Int,
             subDim: Int, ks: Int): Column =
-    GraftColumnBridge.column(
-      new PqRecNormSq(GraftColumnBridge.expression(codes),
-        GraftColumnBridge.expression(centroid), codebooks.toSeq, m, subDim, ks))
+    GraftInternals.column(
+      new PqRecNormSq(GraftInternals.expression(codes),
+        GraftInternals.expression(centroid), codebooks.toSeq, m, subDim, ks))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.{Column, GraftInternals}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -86,7 +86,7 @@ case class SortedIntersectAtLeast(first: Expression, second: Expression,
 
 object SortedIntersectAtLeast {
   def apply(a: Column, b: Column, need: Column): Column =
-    GraftColumnBridge.column(SortedIntersectAtLeast(
-      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b),
-      GraftColumnBridge.expression(need)))
+    GraftInternals.column(SortedIntersectAtLeast(
+      GraftInternals.expression(a), GraftInternals.expression(b),
+      GraftInternals.expression(need)))
 }

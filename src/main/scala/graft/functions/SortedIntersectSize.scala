@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.{Column, GraftInternals}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -83,6 +83,6 @@ case class SortedIntersectSize(left: Expression, right: Expression)
 
 object SortedIntersectSize {
   def apply(a: Column, b: Column): Column =
-    GraftColumnBridge.column(SortedIntersectSize(
-      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
+    GraftInternals.column(SortedIntersectSize(
+      GraftInternals.expression(a), GraftInternals.expression(b)))
 }

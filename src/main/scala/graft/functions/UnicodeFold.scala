@@ -58,8 +58,8 @@ case class UnicodeFold(child: Expression) extends UnaryExpression {
 object UnicodeFold {
 
   def unicodeFold(c: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      UnicodeFold(org.apache.spark.sql.GraftColumnBridge.expression(c)))
+    org.apache.spark.sql.GraftInternals.column(
+      UnicodeFold(org.apache.spark.sql.GraftInternals.expression(c)))
 
   /** NFD → strip Mn → lowercase. ASCII fast path: text already free of
     * high chars (the overwhelming majority of a real corpus) skips the

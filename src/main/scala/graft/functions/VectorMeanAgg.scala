@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.{Column, GraftInternals}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -112,6 +112,6 @@ case class VectorMeanAgg(child: Expression, dim: Int,
 
 object VectorMeanAgg {
   def apply(v: Column, dim: Int): Column =
-    GraftColumnBridge.column(
-      VectorMeanAgg(GraftColumnBridge.expression(v), dim).toAggregateExpression())
+    GraftInternals.column(
+      VectorMeanAgg(GraftInternals.expression(v), dim).toAggregateExpression())
 }

@@ -437,10 +437,10 @@ class GateSpec extends AnyFunSuite {
     assert(broken.getAs[Long]("recall_floor_violation") === 1L)
   }
 
-  test("ivfPqInvariants: an unattainable recall floor fires; clean run green") {
+  test("pqInvariants over IVF-PQ: an unattainable recall floor fires; clean run green") {
     import graft.operators.Similarity
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val clean = Similarity.ivfPqInvariants(e, k = 10).head()
+    val clean = Similarity.pqInvariants(e, k = 10, ivf = true).head()
     assert(clean.getAs[Long]("n_queries") > 0L)
     assert(clean.getAs[Long]("rows_not_k") === 0L)
     assert(clean.getAs[Long]("dup_pairs") === 0L)
@@ -448,7 +448,7 @@ class GateSpec extends AnyFunSuite {
     assert(clean.getAs[Long]("recall_floor_violation") === 0L)
     // recall is ≤ 1 by construction, so a floor above 1 is unattainable
     // for ANY output — the counter must fire through the public knob
-    val broken = Similarity.ivfPqInvariants(e, k = 10, floor = 1.01).head()
+    val broken = Similarity.pqInvariants(e, k = 10, floor = 1.01, ivf = true).head()
     assert(broken.getAs[Long]("recall_floor_violation") === 1L)
   }
 

@@ -397,10 +397,10 @@ class OperatorsSpec extends AnyFunSuite {
       val recall = (brute & inMemoryRows.map(t => (t._1, t._2))).size.toDouble / brute.size
       assert(recall >= floor, s"IVF-PQ recall@10 at $sf below floor $floor: $recall")
       val dir = java.nio.file.Files.createTempDirectory("ivfpq-index-spec").toString
-      val summary = Similarity.buildIvfPqIndex(e, dir, iters = 3)
+      val summary = Similarity.buildIvfIndex(e, dir, iters = 3, codec = Similarity.Pq())
         .collect().map(r => r.getAs[Int]("cell") -> r.getAs[Long]("n_vectors"))
       assert(summary.map(_._2).sum === n, "index lost vectors")
-      val fromIndex = Similarity.searchIvfPqIndex(e, dir, k = 10).collect()
+      val fromIndex = Similarity.searchIvfIndex(e, dir, k = 10).collect()
         .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("neighbor_id"),
           r.getAs[Int]("rank"))).toSet
       assert(fromIndex === inMemoryRows,
@@ -421,18 +421,18 @@ class OperatorsSpec extends AnyFunSuite {
     val base = e.filter(col("vec_id") % 10 =!= 0)
     val batch = e.filter(col("vec_id") % 10 === 0)
     val dir = java.nio.file.Files.createTempDirectory("ivfpq-append-spec").toString
-    Similarity.buildIvfPqIndex(base, dir, iters = 3).count()
-    val deltaRows = Similarity.appendToIvfPqIndex(batch, dir)
+    Similarity.buildIvfIndex(base, dir, iters = 3, codec = Similarity.Pq()).count()
+    val deltaRows = Similarity.appendToIvfIndex(batch, dir)
       .collect().map(_.getAs[Long]("n_vectors")).sum
     assert(deltaRows === batch.count(), "delta segment lost batch rows")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("neighbor_id"),
         r.getAs[Int]("rank"))).toSet
-    val before = rows(Similarity.searchIvfPqIndexWithDelta(e, dir, k = 10))
+    val before = rows(Similarity.searchIvfIndexWithDelta(e, dir, k = 10))
     assert(before.exists(_._2 % 10 == 0),
       "no appended vector ever surfaced as a neighbor")
-    Similarity.compactIvfPqDeltas(spark, dir)
-    val after = rows(Similarity.searchIvfPqIndexWithDelta(e, dir, k = 10))
+    Similarity.compactIvfDeltas(spark, dir)
+    val after = rows(Similarity.searchIvfIndexWithDelta(e, dir, k = 10))
     assert(after === before, "compaction changed IVF-PQ search results")
     val deltaDirs = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("delta"))
@@ -444,26 +444,26 @@ class OperatorsSpec extends AnyFunSuite {
     val base = e.filter(col("vec_id") % 10 =!= 0)
     val batch = e.filter(col("vec_id") % 10 === 0)
     val dir = java.nio.file.Files.createTempDirectory("ivfpq-autocompact-spec").toString
-    Similarity.buildIvfPqIndex(base, dir, iters = 3).count()
-    Similarity.appendToIvfPqIndex(batch, dir).count()
+    Similarity.buildIvfIndex(base, dir, iters = 3, codec = Similarity.Pq()).count()
+    Similarity.appendToIvfIndex(batch, dir).count()
     def deltaDirs() = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("delta")).toSeq
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("neighbor_id"),
         r.getAs[Int]("rank"))).toSet
-    val before = rows(Similarity.searchIvfPqIndexWithDelta(e, dir, k = 10))
+    val before = rows(Similarity.searchIvfIndexWithDelta(e, dir, k = 10))
     // a ~10% delta under a generous 0.9 ratio: the trigger must NOT fire
-    assert(!Similarity.maybeCompactIvfPqDeltas(spark, dir, maxRatio = 0.9),
+    assert(!Similarity.maybeCompactIvfDeltas(spark, dir, maxRatio = 0.9),
       "trigger fired below the ratio")
     assert(deltaDirs().nonEmpty, "no-op trigger deleted the delta")
     // the same delta over a tight 0.01 ratio: fold runs, results identical
-    assert(Similarity.maybeCompactIvfPqDeltas(spark, dir, maxRatio = 0.01),
+    assert(Similarity.maybeCompactIvfDeltas(spark, dir, maxRatio = 0.01),
       "trigger did not fire above the ratio")
     assert(deltaDirs().isEmpty, s"fold left delta dirs: ${deltaDirs()}")
-    val after = rows(Similarity.searchIvfPqIndexWithDelta(e, dir, k = 10))
+    val after = rows(Similarity.searchIvfIndexWithDelta(e, dir, k = 10))
     assert(after === before, "auto-compaction changed search results")
     // idempotent: nothing left to fold
-    assert(!Similarity.maybeCompactIvfPqDeltas(spark, dir, maxRatio = 0.01))
+    assert(!Similarity.maybeCompactIvfDeltas(spark, dir, maxRatio = 0.01))
   }
 
   test("Similarity: staged rebuild publishes atomically and scrubs crash leftovers") {
@@ -494,6 +494,17 @@ class OperatorsSpec extends AnyFunSuite {
     assert(rows(Similarity.searchIvfIndex(e, dir, k = 10, nProbe = 9)) ===
       rows(Similarity.searchIvfIndex(e, fresh, k = 10, nProbe = 9)),
       "rebuilt index drifted from a fresh build")
+    // a stored index's codec is read back from its layout (`codebook/`
+    // means PQ), so an int8 rebuild over a PQ index must drop the codebook
+    Similarity.buildIvfIndex(e, dir, cells = 12, iters = 3,
+      codec = Similarity.Pq()).count()
+    assert(new java.io.File(dir, "codebook").isDirectory)
+    Similarity.buildIvfIndex(e, dir, cells = 12, iters = 3).count()
+    assert(new java.io.File(dir).listFiles().map(_.getName).toSet ===
+      Set("centroids", "segments"), "int8 rebuild left the PQ codebook")
+    assert(rows(Similarity.searchIvfIndex(e, dir, k = 10, nProbe = 9)) ===
+      rows(Similarity.searchIvfIndex(e, fresh, k = 10, nProbe = 9)),
+      "int8 rebuild over a PQ index drifted from a fresh build")
   }
 
   test("Similarity: appended IVF×int8 index keeps recall; batch rows findable") {

@@ -654,7 +654,12 @@ class StreamingSpec extends AnyFunSuite {
     assert(pairs() === afterFirst, "replay drifted search results")
   }
 
-  test("IVF compaction crash points leave a consistent, non-duplicating view") {
+  /** The compaction crash-point script, run over one codec through the
+    * shared IVF lifecycle: crash A (base swapped out, commit never landed),
+    * crash B (commit landed, delta cleanup crashed), the manifest scrub on
+    * a re-append under a folded name, and the final fold.
+    */
+  private def compactionCrashScript(codec: graft.operators.Similarity.IvfCodec): Unit = {
     import org.apache.spark.sql.functions.col
     import graft.operators.Similarity
     val e = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
@@ -662,7 +667,7 @@ class StreamingSpec extends AnyFunSuite {
     val batch = e.filter(col("vec_id") % 10 === 0)
     val batch2 = e.filter(col("vec_id") % 10 === 1)
     val dir = java.nio.file.Files.createTempDirectory("ivf-crash-spec").toString
-    Similarity.buildIvfIndex(base, dir, cells = 12, iters = 3).count()
+    Similarity.buildIvfIndex(base, dir, cells = 12, iters = 3, codec = codec).count()
     Similarity.appendToIvfIndex(batch, dir).count()
     def pairs() = Similarity.searchIvfIndexWithDelta(e, dir, k = 10, nProbe = 9)
       .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("neighbor_id"),
@@ -703,6 +708,14 @@ class StreamingSpec extends AnyFunSuite {
       !f("segments/_FOLDED_DELTAS").exists)
   }
 
+  test("IVF compaction crash points leave a consistent, non-duplicating view") {
+    compactionCrashScript(graft.operators.Similarity.Int8)
+  }
+
+  test("IVF-PQ compaction crash points leave a consistent, non-duplicating view") {
+    compactionCrashScript(graft.operators.Similarity.Pq())
+  }
+
   test("streaming IVF-PQ ingest with mid-stream auto-compaction ≡ the batch append path") {
     // r15 verdict task #3: the IVF-PQ store gets the same
     // one-segment-per-micro-batch ingest as the int8 index, PLUS the
@@ -721,11 +734,13 @@ class StreamingSpec extends AnyFunSuite {
     val streamDir = java.nio.file.Files.createTempDirectory("ivfpq-stream").toString
     val batchDir = java.nio.file.Files.createTempDirectory("ivfpq-batch").toString
     // identical deterministic build (seeded by xxhash64) in both stores
-    Similarity.buildIvfPqIndex(base, streamDir, cells = 12, iters = 3).count()
-    Similarity.buildIvfPqIndex(base, batchDir, cells = 12, iters = 3).count()
+    Similarity.buildIvfIndex(base, streamDir, cells = 12, iters = 3,
+      codec = Similarity.Pq()).count()
+    Similarity.buildIvfIndex(base, batchDir, cells = 12, iters = 3,
+      codec = Similarity.Pq()).count()
     val input = MemoryStream[(Long, Array[Float])]
     var landed = List.empty[(Long, Long)]
-    val q = graft.streaming.VectorIngest.ivfPqIngestStream(
+    val q = graft.streaming.VectorIngest.ivfIngestStream(
       input.toDF().toDF("vec_id", "embedding"), streamDir,
       compactRatio = Some(0.01)) { (id, n) => landed ::= (id, n) }
     try {
@@ -743,9 +758,9 @@ class StreamingSpec extends AnyFunSuite {
         s"delta segments lost vectors: $landed")
       assert(landed.size === 2, s"expected 2 micro-batches, saw $landed")
     } finally q.stop()
-    Similarity.appendToIvfPqIndex(batch, batchDir).count()
+    Similarity.appendToIvfIndex(batch, batchDir).count()
     def pairs(dir: String) =
-      Similarity.searchIvfPqIndexWithDelta(e, dir, k = 10, nProbe = 9)
+      Similarity.searchIvfIndexWithDelta(e, dir, k = 10, nProbe = 9)
         .collect().map(r => (r.getAs[Long]("q_id"),
           r.getAs[Long]("neighbor_id"), r.getAs[Int]("rank"))).toSet
     val streamed = pairs(streamDir)
@@ -754,7 +769,7 @@ class StreamingSpec extends AnyFunSuite {
       s"streamed IVF-PQ store drifted: missing=${(batched -- streamed).take(3)} " +
         s"extra=${(streamed -- batched).take(3)}")
     // final fold of whatever is still live: identical results, clean store
-    Similarity.compactIvfPqDeltas(spark, streamDir)
+    Similarity.compactIvfDeltas(spark, streamDir)
     assert(pairs(streamDir) === batched, "post-stream compaction drifted")
     val remaining = new java.io.File(streamDir).listFiles
       .filter(f => f.isDirectory && f.getName.startsWith("delta"))

@@ -60,6 +60,44 @@ class TuningSpec extends AnyFunSuite {
     } finally spark.conf.set(key, orig)
   }
 
+  test("pinPartitioned reads a temp view replaced after the first pin") {
+    def view(n: Int) = (1 to n).map(i => (i.toLong % 7, i.toLong)).toDF("k", "v")
+    view(100).createOrReplaceTempView("pin_replaced")
+    try {
+      val first = Tuning.pinPartitioned(spark.sql("SELECT * FROM pin_replaced"))
+      assert(first.count() === 100)
+      Tuning.freeCheckpoint(first)
+      // the pin session is a clone whose catalog snapshot still holds the
+      // 100-row view; the pin must read what the caller's session sees
+      view(10).createOrReplaceTempView("pin_replaced")
+      val second = Tuning.pinPartitioned(spark.sql("SELECT * FROM pin_replaced"))
+      assert(second.count() === 10)
+      Tuning.freeCheckpoint(second)
+    } finally spark.catalog.dropTempView("pin_replaced")
+  }
+
+  test("pinPartitioned reads a temp view created after the first pin") {
+    val warm = Tuning.pinPartitioned(spark.range(5).toDF("id"))
+    assert(warm.count() === 5)
+    Tuning.freeCheckpoint(warm)
+    spark.range(42).toDF("id").createOrReplaceTempView("pin_created_later")
+    try {
+      val pinned = Tuning.pinPartitioned(spark.table("pin_created_later"))
+      assert(pinned.count() === 42)
+      Tuning.freeCheckpoint(pinned)
+    } finally spark.catalog.dropTempView("pin_created_later")
+  }
+
+  test("pinPartitioned works on a session with spark.sql.shuffle.partitions unset") {
+    val fresh = spark.newSession()
+    fresh.conf.unset("spark.sql.shuffle.partitions")
+    val df = fresh.range(0, 300).select((col("id") % 11).as("k"), col("id").as("v"))
+      .repartition(4, col("k"))
+    val pinned = Tuning.pinPartitioned(df)
+    assert(pinned.count() === 300)
+    Tuning.freeCheckpoint(pinned)
+  }
+
   test("concurrently divides the arm share; fanout/availableCores honor it") {
     assert(Tuning.currentArmShare === 1)
     val base = Tuning.availableCores(spark)
